@@ -5,7 +5,7 @@ Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 through the noop sink (no driver-side collect — we measure the engine, not
 the result transfer). Also measures the streaming mirror's throughput
 (records/sec) for comparison with the reference's ≈463-575 rec/s baseline
-(BASELINE.md).
+(BASELINE.md). Without $SPARK_GRAFT_CPUS it runs on all of the host's cores.
 
 Output: {"metric": "bench_total_sec", "value": <total>, "unit": "sec",
          "queries": {name: sec, ...}, "sf": <sf>, ...}
@@ -169,7 +169,7 @@ def bench_stream_with_errors(spark, n_records: int = 100_000,
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 

@@ -68,14 +68,16 @@ def test_pagerank_round_joins_halved(spark):
     round (10 Join nodes total) is gone."""
     import re
 
+    from zio_kinesis_example_spark.api import clear_shared_cache
     from zio_kinesis_example_spark.operators.analytics import _PR_ITERS
     from zio_kinesis_example_spark.registry import all_specs
 
     df = all_specs()["q_graph_pagerank"].fn(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert len(re.findall(r"\bJoin\b", plan)) == _PR_ITERS
-    from zio_kinesis_example_spark.api import clear_shared_cache
-    clear_shared_cache()
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"\bJoin\b", plan)) == _PR_ITERS
+    finally:
+        clear_shared_cache()
 
 
 def test_persist_if_big_fires_only_above_floor(spark):
@@ -94,20 +96,22 @@ def test_persist_if_big_fires_only_above_floor(spark):
     old = spark.conf.get("spark.zke.persist.minInputBytes", None)
     spark.conf.set("spark.zke.persist.minInputBytes", "1")
     try:
-        plan_forced = fn(spark, sf)._jdf.queryExecution() \
-            .optimizedPlan().toString()
-        assert "InMemoryRelation" in plan_forced
-        # values are persist-invariant
-        a = sorted(map(tuple, fn(spark, sf).collect()))
-        clear_shared_cache()
+        try:
+            plan_forced = fn(spark, sf)._jdf.queryExecution() \
+                .optimizedPlan().toString()
+            assert "InMemoryRelation" in plan_forced
+            # values are persist-invariant
+            a = sorted(map(tuple, fn(spark, sf).collect()))
+            clear_shared_cache()
+        finally:
+            if old is None:
+                spark.conf.unset("spark.zke.persist.minInputBytes")
+            else:
+                spark.conf.set("spark.zke.persist.minInputBytes", old)
+        b = sorted(map(tuple, fn(spark, sf).collect()))
+        assert a == b
     finally:
-        if old is None:
-            spark.conf.unset("spark.zke.persist.minInputBytes")
-        else:
-            spark.conf.set("spark.zke.persist.minInputBytes", old)
-    b = sorted(map(tuple, fn(spark, sf).collect()))
-    assert a == b
-    clear_shared_cache()
+        clear_shared_cache()
 
 
 def test_shuffle_partitions_falls_back_on_non_numeric_conf(spark):

@@ -963,19 +963,17 @@ def test_upsert_sink_gc_keeps_current_and_previous(spark,
 
 _KILL_CHILD = '''
 import os, signal, sys, time
-sys.path.insert(0, "/root/repo")
-src, ckpt, state, flag = sys.argv[1:5]
-from pyspark.sql import SparkSession
+repo, src, ckpt, state, flag = sys.argv[1:6]
+sys.path.insert(0, repo)
 from pyspark.sql.types import IntegerType, StructField, StructType
+from zio_kinesis_example_spark.session import get_spark
 from zio_kinesis_example_spark.streaming import (
     UpsertSink, decode_json, shard_source,
 )
 
-spark = (SparkSession.builder.master("local[2]")
-         .config("spark.sql.shuffle.partitions", "2")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .getOrCreate())
+# the library's own local session, so recovery runs on the checkpoint
+# file manager it ships
+spark = get_spark(cpus=2, shuffle_partitions=2)
 schema = StructType([StructField("id", IntegerType()),
                      StructField("val", IntegerType())])
 
@@ -1052,7 +1050,8 @@ def test_upsert_sink_survives_mid_batch_jvm_kill(tmpdir_factory_local,
     for k, name in enumerate(sorted(os.listdir(src))):
         os.utime(os.path.join(src, name), (base + k, base + k))
 
-    run = [sys.executable, child, src, ckpt, state, flag]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = [sys.executable, child, repo, src, ckpt, state, flag]
     first = subprocess.run(run, capture_output=True, text=True, timeout=600)
     assert os.path.exists(flag), first.stderr[-2000:]
     assert first.returncode != 0  # the JVM really died mid-batch

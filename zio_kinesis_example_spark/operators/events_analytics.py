@@ -649,9 +649,10 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan-out, and dau is consumed twice more — 3 logical passes over
     # the fact table. Size-conditional persists (no-ops below the
     # floor, i.e. at the local bench SFs) collapse that to ONE events
-    # scan in the executed plan; dau's persist keys on ud's size (its
-    # own output is only |days| rows but its recompute cost is a full
-    # pass over ud).
+    # scan in the executed plan. Both persists key on the events-scan
+    # estimate (ref=e) as the proxy for recompute cost: dau's own output
+    # is only |days| rows, but recomputing it is a full pass over ud,
+    # itself a pass over events.
     ud = persist_if_big(e.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("d")
     ).distinct(), ref=e)

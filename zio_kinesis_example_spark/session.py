@@ -12,6 +12,19 @@ the right default on a 1000-executor cluster reading ~100 TB:
 - UTC session timezone: deterministic date/timestamp semantics regardless of
   host timezone (the reference pins behavior via explicit serde the same way,
   TestMsgJsonSerde.scala:12-15).
+- Streaming checkpoints through ``FileSystemBasedCheckpointFileManager``.
+  Every micro-batch writes three metadata-log files (source log, offset
+  log, commit log), and every state-store delta goes through the same
+  manager. The pip PySpark ships no native Hadoop library, so the default
+  ``FileContext``-based manager sets permissions with a forked ``chmod``
+  and renames through forked status/readlink commands. Measured on a
+  4-core host, one atomic log-file write started 20 processes and took
+  44 ms, against 4 processes (the ``chmod`` of the file and its ``.crc``)
+  and 13 ms with the ``FileSystem``-based manager. On ``file:`` both
+  managers do the same check-then-rename, so atomicity is unchanged. It
+  is set only when this factory creates the session, not in
+  ``RUNTIME_CONFS``: a driver-provided cluster session, which may
+  checkpoint to HDFS or an object store, keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -55,6 +68,11 @@ def get_spark(app_name: str = "zio-kinesis-example-spark",
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # local checkpoints: 4 forked processes per log write instead of
+        # 20 (see the module docstring)
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -29,6 +29,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
 import time
 
 import pyarrow as pa
@@ -88,7 +89,7 @@ def _roll_documents(out_dir: str, copies: int, src: str = SRC) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--copies", type=int, default=10)
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--queries", default=None)
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
@@ -110,7 +111,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
     names = args.queries.split(",") if args.queries else HEAVY_SET
-    import bench as _b  # repo-root bench.py: the warmup + noop force
+    # repo-root bench.py (the warmup + noop force), importable from any
+    # working directory
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))))
+    import bench as _b
     _b.warmup(spark, SRC)
     for name in names:
         fn = specs[name].bench_fn or specs[name].fn

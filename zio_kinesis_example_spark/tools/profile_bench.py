@@ -65,7 +65,7 @@ def profile(names: list[str] | None, sf: str, json_out: str | None,
 
     spark = (
         SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count()}]")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.shuffle.partitions",
