@@ -170,15 +170,14 @@ def test_exact_dedup_on_planted_exact_copies(spark, tmpdir_factory_local):
 
 
 def test_shared_registry_concurrent_keys_do_not_serialize(spark):
-    """_shared builds run under PER-KEY locks: two threads building
-    DIFFERENT keys must both complete (no deadlock through the global
+    """shared() builds run OUTSIDE the registry lock: two threads
+    building DIFFERENT keys must both complete (no deadlock through the
     registry lock) and each build must run exactly once."""
     import threading
 
-    from zio_kinesis_example_spark.operators.llm_dedup import (
-        _shared, clear_shared_cache)
+    from zio_kinesis_example_spark.operators.materialize import clear, shared
 
-    clear_shared_cache()
+    clear()
     calls = {"a": 0, "b": 0}
     barrier = threading.Barrier(2, timeout=30)
     results = {}
@@ -193,7 +192,7 @@ def test_shared_registry_concurrent_keys_do_not_serialize(spark):
         return build
 
     def run(key):
-        results[key] = _shared(
+        results[key] = shared(
             spark, "/tmp/test-sfdir", f"test_{key}", make_build(key),
             persist=False)
 
@@ -205,66 +204,99 @@ def test_shared_registry_concurrent_keys_do_not_serialize(spark):
     assert calls == {"a": 1, "b": 1}
     assert results["a"].count() == 5 and results["b"].count() == 5
     # second access reuses the entry without rebuilding
-    _shared(spark, "/tmp/test-sfdir", "test_a", make_build("a"),
-            persist=False)
+    shared(spark, "/tmp/test-sfdir", "test_a", make_build("a"),
+           persist=False)
     assert calls["a"] == 1
-    clear_shared_cache()
+    clear()
 
 
 def test_shared_registry_race_loser_is_unpersisted(spark):
-    """clear_shared_cache() mid-build race (ADVICE r4): if another
-    thread registers an entry for the same key while our build is in
-    flight, the store step must keep the REGISTERED frame and unpersist
-    our duplicate — neither persisted frame may leak. Simulated
-    deterministically: the build itself plants a competing entry (as if
-    a rival thread won after our key lock was dropped by a clear)."""
-    from zio_kinesis_example_spark.operators.llm_dedup import (
-        _SHARED, _SHARED_LOCK, _shared, clear_shared_cache)
+    """Duplicate-build race (ADVICE r4): if another thread registers an
+    entry for the same key while our build is in flight, shared() must
+    return the REGISTERED frame and never persist our duplicate — no
+    persisted frame may leak. Simulated deterministically: the build
+    itself plants a competing entry (as if a rival thread won)."""
+    from zio_kinesis_example_spark.operators.materialize import (
+        _LOCK, _REGISTRY, clear, shared)
 
-    clear_shared_cache()
+    clear()
     rival = spark.range(3).withColumnRenamed("id", "rival")
     mine = spark.range(7).withColumnRenamed("id", "mine")
     key = (spark.sparkContext.applicationId, "/tmp/test-sfdir", "test_race")
 
     def build():
-        with _SHARED_LOCK:
-            _SHARED[key] = (spark, rival, False, None)
+        with _LOCK:
+            _REGISTRY[key] = (spark, rival, False)
         return mine
 
-    got = _shared(spark, "/tmp/test-sfdir", "test_race", build)
-    # the registered (rival) frame wins; ours was discarded + unpersisted
+    got = shared(spark, "/tmp/test-sfdir", "test_race", build)
+    # the registered (rival) frame wins; ours was discarded unpersisted
     assert got is rival
     lvl = mine.storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "loser frame leaked persist"
-    clear_shared_cache()
+    clear()
 
 
 def test_shared_registry_race_same_plan_keeps_winner_cached(spark):
     """The REAL duplicate-build race produces two frames with the SAME
     logical plan. Spark's CacheManager is plan-keyed, so unpersisting
-    the loser would evict the winner's cache entry too — the store step
-    must detect plan equality and skip the unpersist (code-review r5
-    finding on the first version of this fix)."""
-    from zio_kinesis_example_spark.operators.llm_dedup import (
-        _SHARED, _SHARED_LOCK, _shared, clear_shared_cache)
+    the loser would evict the winner's cache entry too — the losing
+    build must leave the winner cached (code-review r5 finding on the
+    first version of the race fix)."""
+    from zio_kinesis_example_spark.operators.materialize import (
+        _LOCK, _REGISTRY, clear, shared)
 
-    clear_shared_cache()
+    clear()
     rival = spark.range(9).withColumnRenamed("id", "v").persist()
     rival.count()                       # winner's cache, materialized
     key = (spark.sparkContext.applicationId, "/tmp/test-sfdir", "test_race2")
 
     def build():
-        with _SHARED_LOCK:
-            _SHARED[key] = (spark, rival, True, None)
+        with _LOCK:
+            _REGISTRY[key] = (spark, rival, True)
         # identical plan, distinct object — the true race shape
         return spark.range(9).withColumnRenamed("id", "v")
 
-    got = _shared(spark, "/tmp/test-sfdir", "test_race2", build)
+    got = shared(spark, "/tmp/test-sfdir", "test_race2", build)
     assert got is rival
     lvl = rival.storageLevel
     assert lvl.useMemory or lvl.useDisk, \
         "same-plan loser unpersist evicted the winner's cache"
-    clear_shared_cache()
+    clear()
+
+
+def test_loose_persist_cap_drops_oldest_but_spares_a_live_twin(spark):
+    """The LOOSE_CAP backstop for sessions that never clear (the
+    driver's entry loop): one persist past the cap drops the oldest
+    entry and unpersists it; when the oldest has a plan-equal twin that
+    is still registered, the twin's blocks (plan-keyed CacheManager)
+    stay cached."""
+    from zio_kinesis_example_spark.operators.materialize import (
+        LOOSE_CAP, _REGISTRY, clear, persist)
+
+    def frame(n):
+        return spark.range(n).withColumnRenamed("id", "c")
+
+    def cached(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    def registered(df):
+        return any(e[1] is df for e in _REGISTRY.values())
+
+    clear()
+    try:
+        frames = [persist(frame(n + 1)) for n in range(LOOSE_CAP + 1)]
+        assert len(_REGISTRY) == LOOSE_CAP
+        assert not registered(frames[0]) and not cached(frames[0])
+        assert all(registered(f) and cached(f) for f in frames[1:])
+        # frames[1] is now the oldest; its twin has the same plan
+        twin = persist(frame(2))
+        assert len(_REGISTRY) == LOOSE_CAP
+        assert not registered(frames[1]) and registered(twin)
+        assert cached(twin), "cap eviction unpersisted a live twin's plan"
+    finally:
+        clear()
 
 
 def test_cc_edges_equal_exact_jaccard_edges(spark):

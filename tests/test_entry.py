@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as ent
 
@@ -103,7 +105,7 @@ print(json.dumps(mods))
 """
     out = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
-        cwd="/root/repo", check=True,
+        cwd=REPO, check=True,
     ).stdout.strip().splitlines()[-1]
     mods = json.loads(out)
     waves = ["pipeline_ext", "pipeline_ext2", "pipeline_ext3",

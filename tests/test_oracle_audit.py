@@ -1797,9 +1797,12 @@ def test_audit_table_covers_registry():
     registered set — a new query landing without its audit row (class +
     rationale, and a model test if M-R) fails here, enforcing the
     AUDIT.md §5 maintenance rule mechanically."""
+    import os
     import re
 
-    text = open("/root/repo/AUDIT.md").read()
+    audit = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "AUDIT.md")
+    text = open(audit).read()
     section3 = text.split("## 3.")[1].split("## 4.")[0]
     table = re.findall(r"^\| `(q_[a-z0-9_]+)` \|", section3, re.M)
     audited = set(table)

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from zio_kinesis_example_spark.operators.exact import spread_scan
+from zio_kinesis_example_spark.operators.materialize import spread_scan
 from zio_kinesis_example_spark.registry import all_specs
 
 SF = "/root/testdata/sf0.001"

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from zio_kinesis_example_spark.operators.exact import spread_scan
+from zio_kinesis_example_spark.operators.materialize import spread_scan
 
 
 def _explain(df) -> str:
@@ -80,12 +80,13 @@ def test_pagerank_round_joins_halved(spark):
         clear_shared_cache()
 
 
-def test_persist_if_big_fires_only_above_floor(spark):
+def test_persist_if_big_fires_only_above_floor(spark, monkeypatch):
     """r14 conditional persist (VERDICT r13 #2): below the size floor
     the events-family plans carry NO InMemoryRelation (the local bench
     path is byte-identical to r13); with the floor forced to 1 byte
     every multi-consumer frame persists and the plan reads caches."""
     from zio_kinesis_example_spark.api import clear_shared_cache
+    from zio_kinesis_example_spark.operators import materialize
     from zio_kinesis_example_spark.registry import all_specs
 
     sf = "/root/testdata/sf0.001"
@@ -93,25 +94,53 @@ def test_persist_if_big_fires_only_above_floor(spark):
     plan_default = fn(spark, sf)._jdf.queryExecution() \
         .optimizedPlan().toString()
     assert "InMemoryRelation" not in plan_default
-    old = spark.conf.get("spark.zke.persist.minInputBytes", None)
-    spark.conf.set("spark.zke.persist.minInputBytes", "1")
     try:
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(materialize, "PERSIST_MIN_INPUT_BYTES", 1)
             plan_forced = fn(spark, sf)._jdf.queryExecution() \
                 .optimizedPlan().toString()
             assert "InMemoryRelation" in plan_forced
             # values are persist-invariant
             a = sorted(map(tuple, fn(spark, sf).collect()))
             clear_shared_cache()
-        finally:
-            if old is None:
-                spark.conf.unset("spark.zke.persist.minInputBytes")
-            else:
-                spark.conf.set("spark.zke.persist.minInputBytes", old)
         b = sorted(map(tuple, fn(spark, sf).collect()))
         assert a == b
     finally:
         clear_shared_cache()
+
+
+def test_unknown_size_estimate_never_persists(spark):
+    """A frame with no size statistics (a local relation, an RDD-backed
+    frame) reports the spark.sql.defaultSizeInBytes sentinel
+    (Long.MaxValue): that is UNKNOWN, not big, so the ref-conditional
+    persist in mix_drift_chi2 must not fire — and the values equal a
+    direct chi-square computation."""
+    from zio_kinesis_example_spark import api
+
+    mix = {0: {"a": 10, "b": 10, "c": 10}, 1: {"a": 25, "b": 3, "c": 2},
+           2: {"a": 5, "b": 5}, 3: {"c": 20}}
+    rows = [(g, c) for g, cs in mix.items() for c, n in cs.items()
+            for _ in range(n)]
+    df = spark.createDataFrame(rows, "g long, c string")
+    try:
+        out = api.mix_drift_chi2(df, "g", "c")
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+        got = {r.g: (r.n_rows, r.n_classes, r.chi2, r.drifted)
+               for r in out.collect()}
+    finally:
+        api.clear_shared_cache()
+    ct = {c: sum(cs.get(c, 0) for cs in mix.values()) for c in "abc"}
+    tot = len(rows)
+    for g, cs in mix.items():
+        gt = sum(cs.values())
+        chi2 = 0.0
+        for c in sorted(ct):
+            e = float(gt * ct[c]) / tot
+            chi2 += ((cs.get(c, 0) - e) * (cs.get(c, 0) - e)) / e
+        n_rows, n_classes, got_chi2, drifted = got[g]
+        assert (n_rows, n_classes, drifted) == (gt, 3, chi2 > 9.487729)
+        assert got_chi2 == pytest.approx(chi2, abs=1e-6)
 
 
 def test_shuffle_partitions_falls_back_on_non_numeric_conf(spark):

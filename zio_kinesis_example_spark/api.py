@@ -15,12 +15,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .operators.llm_dedup import (  # noqa: F401  (re-exported surface)
-    clear_shared_cache,
     embedding_pairs,
     minhash_signatures,
     simhash_pairs,
 )
 from .operators.llm_similarity import cosine, lsh_buckets  # noqa: F401
+from .operators.materialize import clear as clear_shared_cache  # noqa: F401
 
 
 def dedup_exact(df: DataFrame, text_col: str,
@@ -492,7 +492,7 @@ def repeated_spans(df: DataFrame, text_col: str, id_col: str,
     # no-op when the scan already parallelizes. (The cheap split-only
     # text explodes measured WORSE with this — the concat fan-out is
     # what amortizes the exchange.)
-    from .operators.exact import spread_scan
+    from .operators.materialize import spread_scan
     spans = (
         spread_scan(df).select(F.col(id_col).alias("__id"),
                                F.split(F.col(text_col), " ").alias("__terms"))
@@ -635,16 +635,16 @@ def mix_drift_chi2(df: DataFrame, group_col: str, class_col: str,
     ``class_col`` histogram against the marginal distribution, summed in
     explicit class order so the float chain is engine-reproducible.
     Returns (group_col, n_rows, n_classes, chi2, drifted)."""
-    from .operators.exact import persist_if_big
+    from .operators.materialize import persist
 
     # r14 (VERDICT r13 #2): the contingency matrix m feeds four
     # consumers (class totals, group totals, grand total, the grid
     # join) — each a full logical pass over the input. The persist is
     # size-conditional on the INPUT frame's estimate (the cost of one
     # redundant pass): a no-op on small inputs where the r13
-    # measurement showed the barrier losing, one input scan in the
-    # executed plan above it.
-    m = persist_if_big(
+    # measurement showed the barrier losing and on inputs with no size
+    # estimate, one input scan in the executed plan above it.
+    m = persist(
         df.groupBy(group_col, class_col).agg(F.count(F.lit(1)).alias("__o")),
         ref=df)
     ct = m.groupBy(class_col).agg(F.sum("__o").alias("__ct"))

@@ -223,30 +223,30 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster where |nodes| outgrows the threshold — the strategy is no
     longer hard-coded into the plan). Each round references the
     previous round exactly once, so lineage stays linear and nothing is
-    recomputed; edges/deg are loose-tracked persists (the llm_dedup
-    registry), released by clear_shared_cache()/LRU instead of an
-    eager end-of-query checkpoint job. Measured interleaved min-of-4
+    recomputed; edges/deg are tracked persists (materialize.persist),
+    released by clear_shared_cache() or the registry's oldest-first cap
+    instead of an eager end-of-query checkpoint job. Measured interleaved min-of-4
     at sf0.1: 3.98 s → 3.45 s, jobs 33 → ~14 (AQE stages), results
     hash-identical.
 
     SINGLE-ACTION CONTRACT (r14, ADVICE r13): the returned frame stays
-    lineage-dependent on the two loose-tracked persists; the "edges
-    scanned once" property holds for any actions taken while those
-    caches live. A ``clear_shared_cache()`` (or LRU eviction) between
+    lineage-dependent on the tracked persists; the "edges scanned
+    once" property holds for any actions taken while those caches
+    live. A ``clear_shared_cache()`` (or a cap eviction) between
     caller actions recomputes the 5-round chain from the parquet scan —
     values stay correct, only the single-scan guarantee resets. The
     bench/oracle drivers take exactly one action per build, which is
     the intended shape; a multi-action caller that clears caches
     in between should ``localCheckpoint()`` the result itself.
     """
-    from .llm_dedup import _track_persist
+    from .materialize import persist
 
     li = load(spark, sf_dir, "lineitem")
     # ONE distinct after the union (not one per direction): both
     # directions ride a single exchange — measured 4× cheaper than
     # dedup-then-mirror, which pays the distinct shuffle twice or forces
     # an extra materialization.
-    edges = _track_persist(
+    edges = persist(
         li.select(
             (F.col("l_partkey") * 2).alias("src"),
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
@@ -257,7 +257,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).distinct()
     )
-    deg = _track_persist(
+    deg = persist(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
     # r14 (guide §2.4 — one join per round instead of two): outdeg is a
     # per-src constant, so attach it to the edge list ONCE and cache
@@ -266,7 +266,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multiset of (dst, rate) terms, so every round's sum is unchanged
     # bit-for-bit). The old shape paid a pr⋈deg shuffle join per round
     # on top of the edges⋈rates one — 10 round-joins; now 5.
-    edges_deg = _track_persist(edges.join(deg, "src"))
+    edges_deg = persist(edges.join(deg, "src"))
     pr = deg.select(F.col("src").alias("node"),
                     F.lit(_PR_SCALE).cast("long").alias("pr"))
     base = _PR_SCALE * 15 // 100

@@ -27,7 +27,8 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import query
-from .exact import measure_domain, spread_scan
+from .exact import measure_domain
+from .materialize import spread_scan
 
 # 5-term shingles for decontamination overlap (eval-set n-gram matching,
 # the standard train/test-overlap definition). Distinct per doc.

@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load
 from ..registry import query
-from .exact import persist_if_big
+from .materialize import persist
 
 
 @query(
@@ -88,17 +88,17 @@ def funnel_stage_times(spark: SparkSession, sf_dir: str):
     size-conditionally persisted, so the executed plan scans the fact
     table ONCE and every reuse is an InMemoryTableScan."""
     raw = load(spark, sf_dir, "events")
-    e = persist_if_big(
+    e = persist(
         raw.select("user_id", "event_type", "ts"), ref=raw)
-    v = persist_if_big(
+    v = persist(
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id").agg(F.min("ts").alias("t1")), ref=raw)
-    c = persist_if_big(
+    c = persist(
         e.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id").agg(F.min("ts").alias("t2")), ref=raw)
-    p = persist_if_big(
+    p = persist(
         e.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
         .filter(F.col("ts") > F.col("t2"))
@@ -653,10 +653,10 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # estimate (ref=e) as the proxy for recompute cost: dau's own output
     # is only |days| rows, but recomputing it is a full pass over ud,
     # itself a pass over events.
-    ud = persist_if_big(e.select(
+    ud = persist(e.select(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("d")
     ).distinct(), ref=e)
-    dau = persist_if_big(
+    dau = persist(
         ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau")), ref=e)
     contrib = ud.select(
         "user_id",

@@ -6,7 +6,9 @@ partition order — sum an EXACT representation (int64 cents or DECIMAL)
 and convert to double once, so both engines emit identical bits at any
 scale factor. These helpers existed as four-plus verbatim copies across
 operator modules before round 6 centralized them (the drift class the
-curation/codec refactors also closed).
+curation/codec refactors also closed). The module also holds the
+measure-domain and tick filters those sums assume; persist and
+scan-spread helpers live in materialize.py.
 """
 
 from __future__ import annotations
@@ -19,87 +21,6 @@ from pyspark.sql import functions as F
 #: cell hash in relational.py — with the 16-bit-split mod-2^32 product
 #: trick documented at those sites keeping every term ANSI-int64-safe.
 KNUTH = 2654435761
-
-
-def spread_scan(df):
-    """Repartition an UNDER-PARALLELIZED scan before CPU-heavy per-row
-    work (wide decimal arithmetic, grouping-set row expansion, spatial
-    probe fan-out). A single-file table scans as one input partition
-    (maxPartitionBytes), serializing everything up to the first
-    exchange onto one core — guide §2.5's "input skew" case.
-
-    SCALE-ADAPTIVE (r13): fires only when the scan has fewer partitions
-    than cores — at 100 TB the table has thousands of splits and this
-    is a no-op (no shuffle added); locally it unlocks full-width
-    parallelism for the pre-exchange stage. Contrast llm_dedup._spread,
-    which is unconditional because its inputs are always small.
-
-    STATIC probe only (r14, ADVICE r13): an AQE-wrapped plan (one that
-    carries an exchange or subquery) is returned UNCHANGED — on such a
-    frame a ``df.rdd`` partition-count probe would force
-    ``getFinalPhysicalPlan()``, eagerly executing every upstream
-    shuffle stage at plan-build time without those stages being reused
-    by the real query. An adaptive plan is by construction not the
-    under-parallelized raw scan this helper exists for (its exchanges
-    re-establish parallelism, and AQE coalescing owns the post-shuffle
-    width), so the no-op is also the semantically right answer. For
-    non-adaptive (scan-rooted) plans the ``.rdd`` probe only builds the
-    RDD DAG — no job runs."""
-    sc = df.sparkSession.sparkContext
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        return df
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
-
-
-#: Input-size floor for persist_if_big (bytes). Chosen from the r14
-#: measured crossover on rolled copies of sf0.1: at the 1× events table
-#: (2 MB) a persist's materialization barrier costs MORE than the
-#: redundant parallel re-scans it saves (the r13 measured regression:
-#: funnel 0.51 → 0.79 s), at the 10× proxy (20 MB) the persist already
-#: wins (OPTIMIZATION_r14.md "events re-scan family"). Production
-#: tables are orders of magnitude past the floor, so at 100 TB the
-#: persist ALWAYS fires and the fact table is scanned once per query
-#: instead of 3–8×. Override via spark.zke.persist.minInputBytes.
-PERSIST_MIN_INPUT_BYTES = 8 * 1024 * 1024
-
-
-def persist_if_big(df, ref=None):
-    """Tracked persist of a multi-consumer frame, CONDITIONAL on the
-    optimizer's size estimate of ``ref`` (default: ``df`` itself) —
-    the input-size-conditional persist of VERDICT r13 #2.
-
-    The r13 round measured both sides: redundant logical re-scans of
-    the events fact table (3–8 per query in the funnel/DAU family) are
-    cheaper than a persist barrier at 11 MB local inputs, and the
-    opposite holds as the input grows — so neither "never persist" nor
-    "always persist" is right, and the decision must key on input
-    size. The key is the Catalyst size estimate
-    (``optimizedPlan().stats().sizeInBytes`` — the same statistic
-    broadcast planning rides): static plan info, no job, valid for any
-    storage backend. Persisted frames register with the llm_dedup
-    loose-persist registry, so ``clear_shared_cache()`` (which the
-    bench calls between timed runs) releases them — the per-query-cold
-    bench contract is untouched.
-
-    Pass ``ref`` when the deciding input is not the frame itself (e.g.
-    persist the small per-user anchor frame when the EVENTS SCAN it
-    shields is big)."""
-    src = df if ref is None else ref
-    spark = df.sparkSession
-    try:
-        floor = int(spark.conf.get("spark.zke.persist.minInputBytes",
-                                   str(PERSIST_MIN_INPUT_BYTES)))
-    except ValueError:
-        floor = PERSIST_MIN_INPUT_BYTES
-    size = int(str(
-        src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    if size < floor:
-        return df
-    from .llm_dedup import _track_persist
-    return _track_persist(df)
 
 
 def cents_sum(col: str = "value", dp: int = 6) -> Column:

@@ -43,15 +43,15 @@ surface mandated by BASELINE.json.
 
 from __future__ import annotations
 
-import contextlib
 import random
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import EMB_VALID_SQL, load
 from ..registry import query
+from . import materialize
+from .materialize import persist, shared, spread
 
 # 3-term shingles; documents.text is space-separated terms (FIXTURES.md §B).
 _SHINGLES = """
@@ -141,280 +141,27 @@ _DUCK_MINHASH = (
 
 
 # Intermediate frames shared by the dedup family (shingle sets, simhash
-# signatures, minhash band buckets), persisted once per (session, sf_dir)
-# and reused across queries: the driver's correctness pass and bench.py
-# both run q_dedup_ngram_jaccard / _minhash / _minhash_pairs / _simhash /
-# _simhash_pairs / _clusters back-to-back against the same input, and the
-# shingling/hashing scan is the dominant shared prefix. At 100 TB this is
-# exactly the "materialize the signature table once" step every dedup
-# pipeline performs — not a local-only trick. If an outside caller ran
-# clearCache() (bench.py does between timed runs), the frame is
-# re-persisted lazily; nothing here is correctness-bearing.
-#: value = (session, frame, persisted?, semantic hash or None). The
-#: hash is captured at registration so eviction paths can re-check
-#: plan-equality candidates with LOCAL int compares (no py4j under the
-#: global lock).
-_SHARED: dict[tuple[str, str, str],
-              tuple[SparkSession, DataFrame, bool, int | None]] = {}
-_SHARED_KEY_LOCKS: dict[tuple[str, str, str], threading.RLock] = {}
-# RLock kept for safety: no current build re-enters its OWN key (the r3
-# codegen inlining removed the shingle-frame nesting the original
-# comment described), but builds may legally call _shared() for OTHER
-# keys (cc_labels builds from the shingle frame), and re-entrancy on
-# the global lock costs nothing.
-_SHARED_LOCK = threading.RLock()
-
-
-def _session_stopped(spark: SparkSession) -> bool:
-    try:
-        return spark.sparkContext._jsc is None \
-            or spark.sparkContext._jsc.sc().isStopped()
-    except Exception:
-        return True
-
-
-def _shared(spark: SparkSession, sf_dir: str, key: str, build,
-            persist: bool = True) -> DataFrame:
-    """Memoize a per-(session, sf_dir) intermediate.
-
-    ``persist=False`` is for builds that return an already-materialized
-    frame (the CC label fixpoint eagerly localCheckpoints its result) —
-    persisting again would store the same rows twice on the executors.
-
-    The GLOBAL lock guards only registry-dict reads/writes — every py4j
-    round-trip (isStopped, storageLevel, persist, semanticHash) runs
-    OUTSIDE it (the r8 locking rule: a slow or wedged JVM gateway must
-    never stall unrelated registry callers); build() runs under a
-    PER-KEY lock so a long materializing build (the CC fixpoint runs
-    whole Spark jobs) never blocks threads building unrelated frames.
-    """
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    with _SHARED_LOCK:
-        entry = _SHARED.get(k)
-    if entry is None:
-        # MISS path only: sweep entries whose owning session is gone
-        # (their frames are dead weight keyed by stale applicationIds).
-        # The isStopped py4j probes run outside the lock on a snapshot;
-        # deletion re-confirms identity under the lock.
-        with _SHARED_LOCK:
-            items = list(_SHARED.items())
-        stale = [sk for sk, e in items if _session_stopped(e[0])]
-        snap = dict(items)   # hoisted (r9 review: rebuilding this dict
-        with _SHARED_LOCK:   # per stale key was O(n·stale) under the lock)
-            for sk in stale:
-                cur = _SHARED.get(sk)
-                if cur is not None and cur[0] is snap[sk][0]:
-                    del _SHARED[sk]
-                    _SHARED_KEY_LOCKS.pop(sk, None)
-            key_lock = _SHARED_KEY_LOCKS.setdefault(k, threading.RLock())
-        with key_lock:
-            with _SHARED_LOCK:
-                entry = _SHARED.get(k)
-            if entry is None:
-                df = build()
-                if persist:
-                    df = df.persist()
-                h = _sem_hash(df)  # py4j, outside the global lock
-                with _SHARED_LOCK:
-                    # Re-validate before storing: clear_shared_cache()
-                    # may have dropped our key lock mid-build, letting
-                    # another thread build and register first. Keep
-                    # whichever frame is registered.
-                    existing = _SHARED.get(k)
-                    if existing is None or existing[1] is df:
-                        _SHARED[k] = (spark, df, persist, h)
-                        existing = None
-                if existing is not None:
-                    # Unpersist the loser ONLY when its plan differs
-                    # from the winner's — CacheManager is PLAN-keyed
-                    # (uncacheQuery matches by sameResult), so for the
-                    # common same-build race the duplicate persist() was
-                    # a no-op on the winner's entry and unpersisting the
-                    # loser would evict the winner's cache too. The
-                    # comparison + unpersist run outside the global lock
-                    # (r8 rule); the residual window — a third frame
-                    # plan-equal to the DIFFERENT-planned loser
-                    # registering mid-unpersist — is rare and
-                    # performance-only. Indeterminate equality counts
-                    # as a match: a bounded leak beats evicting the
-                    # registered frame.
-                    winner = existing[1]
-                    if persist:
-                        same_plan = True
-                        with contextlib.suppress(Exception):
-                            same_plan = bool(
-                                df._jdf.queryExecution().analyzed()
-                                .sameResult(winner._jdf.queryExecution()
-                                            .analyzed()))
-                        if not same_plan and not _session_stopped(spark):
-                            with contextlib.suppress(Exception):
-                                df.unpersist()
-                    df = winner
-                return df
-    df = entry[1]
-    if entry[2]:
-        lvl = df.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            df.persist()
-    return df
-
-
-def clear_shared_cache(unpersist: bool = True) -> int:
-    """Drop every cached dedup intermediate, optionally unpersisting live
-    frames; returns the number of entries dropped (keyed + loose).
-    Callers that interleave dedup runs with storage-sensitive work
-    should call this between phases — it is a PHASE-BOUNDARY reset:
-    a registration racing the clear may have its just-persisted frame
-    unpersisted along with the plan-equal cleared one (the plan-keyed
-    CacheManager), recomputing later; callers are expected not to clear
-    mid-flight.
-
-    Scope note: this guarantees the NEXT access rebuilds from scratch
-    (timing coldness — the registry forgets the frames). unpersist()
-    frees CacheManager storage, but blocks behind a localCheckpoint
-    (cc_labels) are only released when the JVM object is GC'd via the
-    ContextCleaner — dropping the reference here is what makes that
-    possible, not immediate. The unpersist py4j calls run OUTSIDE the
-    registry lock (the r8 locking rule)."""
-    with _SHARED_LOCK:
-        keyed = [(e[0], e[1]) for e in _SHARED.values()]
-        loose = [(s, d) for s, d, _h in _LOOSE_PERSISTS]
-        n = len(keyed) + len(loose)
-        _SHARED.clear()
-        _SHARED_KEY_LOCKS.clear()
-        _LOOSE_PERSISTS.clear()
-    if unpersist:
-        for sess, df in keyed + loose:
-            if not _session_stopped(sess):
-                with contextlib.suppress(Exception):
-                    df.unpersist()
-    return n
-
-
-#: Query-internal persisted frames (no registry key — e.g. the distinct-
-#: signature frame simhash_pairs caches per call): registered here so
-#: clear_shared_cache() gives library/test callers the same release hook
-#: the bench and driver loops already use.
-_LOOSE_PERSISTS: list[tuple[SparkSession, DataFrame, int | None]] = []
-
-#: Backstop for library callers that never call clear_shared_cache():
-#: once the registry exceeds this many entries the oldest are evicted
-#: (unpersisted) on the next _track_persist call, so a long-lived session
-#: pins at most a bounded set of cache blocks. Eviction is performance-
-#: only (the frame recomputes). CacheManager is plan-keyed, so evicting
-#: a frame whose semantic plan equals a still-live tracked frame's would
-#: drop the live frame's blocks too — _track_persist therefore skips the
-#: unpersist (but still drops the reference) when any live tracked entry
-#: sameSemantics-matches the evictee.
-_LOOSE_PERSISTS_CAP = 32
-
-
-def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-    """True when the two frames share a semantic plan (CacheManager key).
-    Indeterminate (exception) counts as a MATCH: the caller's safe
-    action on a match is to SKIP eviction, and a bounded reference leak
-    beats unpersisting a possibly-live twin's blocks — the same default
-    _shared() takes for its own indeterminate case."""
-    try:
-        return a.sameSemantics(b)
-    except Exception:
-        return True
-
-
-def _sem_hash(df: DataFrame) -> int | None:
-    """Cached-at-track-time semantic hash (None = unknown): a local int
-    compare prefilters the per-eviction sameSemantics py4j round-trips
-    down to hash ties."""
-    try:
-        return df.semanticHash()
-    except Exception:
-        return None
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    """persist() a frame and register it for clear_shared_cache release
-    (or capped, plan-aware LRU eviction — see _LOOSE_PERSISTS_CAP).
-
-    Locking (r8 fix): _SHARED_LOCK guards only list mutation and
-    reference snapshots — every py4j round-trip (semanticHash,
-    sameSemantics, unpersist) runs OUTSIDE it, so a slow or wedged JVM
-    gateway can no longer block every concurrent _shared()/persist
-    caller on the registry lock."""
-    df = df.persist()
-    h = _sem_hash(df)
-    evictees: list[tuple] = []
-    with _SHARED_LOCK:
-        _LOOSE_PERSISTS.append((df.sparkSession, df, h))
-        while len(_LOOSE_PERSISTS) > _LOOSE_PERSISTS_CAP:
-            evictees.append(_LOOSE_PERSISTS.pop(0))
-    for sess, old, oh in evictees:
-        if _session_stopped(sess):
-            continue
-        # snapshot live-candidate references under the lock; hash
-        # prefilter keeps the out-of-lock comparisons O(1) py4j calls
-        # in the common case (a None hash — unknown — is a potential
-        # tie and must be compared)
-        with _SHARED_LOCK:
-            live = [d for s, d, lh in _LOOSE_PERSISTS
-                    if s is sess and (oh is None or lh is None or lh == oh)]
-            live += [d for s, d, _p, lh in _SHARED.values()
-                     if s is sess and (oh is None or lh is None or lh == oh)]
-            seen = list(live)
-        if any(_same_plan(old, d) for d in live):
-            # unpersisting would evict the live twin's blocks too
-            # (plan-keyed CacheManager); dropping the reference is
-            # enough to keep the registry bounded.
-            continue
-        # Close the registration race: under the lock, re-check for
-        # entries added since the snapshot using the STORED hashes only
-        # (local int compares — no py4j under the lock; unknown hash =
-        # potential twin = skip, eviction is performance-only), then
-        # unpersist while still holding it. RESIDUAL window (r9 review):
-        # _shared's builder calls df.persist() BEFORE it takes this lock
-        # to register, so a plan-equal twin that is persisted but not
-        # yet registered can still lose its cache entry here — the
-        # affected query then runs uncached (recomputes, never wrong);
-        # accepted as performance-only, since closing it would mean
-        # registering unpersisted frames or holding the lock across
-        # py4j persist calls. The single bounded unpersist call under
-        # the lock is the deliberate exception to the
-        # no-py4j-under-lock rule: it makes decision + action atomic.
-        with _SHARED_LOCK:
-            fresh = [1 for s, d, lh in _LOOSE_PERSISTS
-                     if s is sess and all(d is not x for x in seen)
-                     and (oh is None or lh is None or lh == oh)]
-            fresh += [1 for s, d, _p, lh in _SHARED.values()
-                      if s is sess and all(d is not x for x in seen)
-                      and (oh is None or lh is None or lh == oh)]
-            if fresh:
-                continue
-            with contextlib.suppress(Exception):
-                old.unpersist()
-    return df
-
-
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Repartition a small-file scan across the cluster before per-row
-    heavy work (shingling, hashing, explode). A single parquet file scans
-    as ONE input partition (maxPartitionBytes), serializing everything
-    downstream onto one core — at 100 TB the lake has many files and
-    this is a no-op-sized shuffle; locally it unlocks 32-way parallelism
-    (measured 3× on the minhash pipeline)."""
-    return df.repartition(spark.sparkContext.defaultParallelism)
+# signatures, CC labels) live in the one materialization registry
+# (operators/materialize.py), persisted once per (session, sf_dir): the
+# driver's correctness pass and bench.py run the family back-to-back
+# against the same input, and the shingling/hashing scan is the
+# dominant shared prefix.
+#: The whole registry under the name perfbench/run.py's leak probe reads.
+_SHARED = materialize._REGISTRY
 
 
 def _with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         # NULL-text docs carry no shingles (r12 content-stress: unknown
         # content cannot be dup-judged — NULL never equals NULL)
-        d = _spread(spark, load(spark, sf_dir, "documents")
-                    .filter(F.col("text").isNotNull()))
+        d = spread(spark, load(spark, sf_dir, "documents")
+                   .filter(F.col("text").isNotNull()))
         return (
             d.select("doc_id", F.split("text", " ").alias("terms"))
             .select("doc_id", F.expr(_SHINGLES).alias("shingles"))
         )
 
-    return _shared(spark, sf_dir, "shingles", build)
+    return shared(spark, sf_dir, "shingles", build)
 
 
 def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,8 +174,8 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_minhash regression); ``select(explode(<expr>))`` keeps the
     split→shingle→explode chain in one codegen stage. Used by the
     signature path, which never needs the per-doc array form."""
-    d = _spread(spark, load(spark, sf_dir, "documents")
-                .filter(F.col("text").isNotNull()))
+    d = spread(spark, load(spark, sf_dir, "documents")
+               .filter(F.col("text").isNotNull()))
     inline = _SHINGLES.replace("terms", "split(text, ' ')")
     return d.select("doc_id", F.explode(F.expr(inline)).alias("sh"))
 
@@ -537,9 +284,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _with_shingles(spark, sf_dir)
     # persisted INSIDE the query (the round-5 simhash_pairs lesson:
     # ReuseExchange does not dedupe the subtree the df-agg, candidate
-    # join, and size/hot builds all share). Released by
-    # clear_shared_cache() like every loose persist in this module.
-    eh = _track_persist(
+    # join, and size/hot builds all share). A tracked persist, released
+    # by clear_shared_cache().
+    eh = persist(
         s.select("doc_id", F.size("shingles").cast("long").alias("n"),
                  F.explode("shingles").alias("shingle"))
         .select("doc_id", "n",
@@ -652,7 +399,7 @@ def _shared_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Default-parameter minhash band buckets, persisted once per
     (session, sf_dir) — the shared index of q_dedup_minhash and
     q_dedup_minhash_pairs."""
-    return _shared(
+    return shared(
         spark, sf_dir, "minhash_buckets",
         lambda: _signatures_from_exploded(_exploded_shingles(spark, sf_dir)),
     )
@@ -815,7 +562,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the branch-free tally measured ~2× slower.
     """
     def build() -> DataFrame:
-        d = _spread(spark, load(spark, sf_dir, "documents"))
+        d = spread(spark, load(spark, sf_dir, "documents"))
         term_hashes = d.select(
             "doc_id",
             F.explode(F.expr("array_distinct(split(text, ' '))")).alias("t"),
@@ -831,7 +578,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return bit_sums.select("doc_id", F.expr(assemble).alias("simhash"))
 
-    return _shared(spark, sf_dir, "simhash_signatures", build)
+    return shared(spark, sf_dir, "simhash_signatures", build)
 
 
 @query(
@@ -904,12 +651,10 @@ def simhash_pairs(signatures: DataFrame, max_hamming: int = 3,
     # references this subtree on BOTH sides, and Spark plans two separate
     # instances of the distinct+explode chain — caching it is a measured
     # ~25 % end-to-end win cold (r5 profiling; ReuseExchange does not
-    # cover it). Tracked so clear_shared_cache() (and therefore bench,
-    # the driver loop, and library callers) can release the blocks.
-    # LIBRARY CALLERS: each call with a distinct input pins one cache
-    # entry for the session — call clear_shared_cache() between phases,
-    # or rely on the _LOOSE_PERSISTS_CAP backstop evicting the oldest.
-    sigs = _track_persist(signatures.select("simhash").distinct())
+    # cover it). A tracked persist: clear_shared_cache() releases it, and
+    # a session that never clears keeps at most materialize.LOOSE_CAP
+    # such frames (the oldest is dropped first).
+    sigs = persist(signatures.select("simhash").distinct())
     chunk_arr = "array(" + ", ".join(
         f"shiftright(simhash, {sh}) & {mk}" for sh, mk in layout
     ) + ")"
@@ -1364,7 +1109,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist=False: build() returns an eagerly checkpointed frame —
     # already materialized and recompute-free; persisting again would
     # store the vertex table twice on the executors
-    return _shared(spark, sf_dir, "cc_labels", build, persist=False)
+    return shared(spark, sf_dir, "cc_labels", build, persist=False)
 
 
 @query(

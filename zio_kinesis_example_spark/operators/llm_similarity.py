@@ -46,7 +46,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import EMB_VALID_SQL, load  # noqa: F401  (EMB_VALID_SQL re-exported: ONE contract, see emb_table)
 from ..registry import query
-from . import llm_dedup
+from .materialize import session_stopped, spread
 
 _K = 5
 _QUERY_FILTER = "vec_id % 50 = 0"  # deterministic small query set
@@ -255,7 +255,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single parquet file scans as ONE partition and the whole crossJoin
     # serializes onto one core (measured 33s vs 2.6s at sf0.1).
     # (r14 re-measure of the r6 "don't spread the BLAS kernels" pin,
-    # VERDICT r13 #7: the IVF/IVFPQ corpus sides have carried _spread
+    # VERDICT r13 #7: the IVF/IVFPQ corpus sides have carried spread
     # since r10; toggling it OFF on q_sim_ann_ivfpq measured a WASH —
     # interleaved min-of-5 ×3: ON 2.53/2.31/1.96 s vs OFF
     # 2.60/1.89/2.28 s — because the spread precedes ONE fused
@@ -509,7 +509,7 @@ def _ann_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: family members run in one session (bench.py and the driver's
 #: correctness pass run q_sim_ann_ivf / _pq / _ivfpq back-to-back; IVFPQ
 #: re-derives exactly the codebooks its two parents already trained).
-#: The dedup `_shared` precedent (llm_dedup.py) applied to driver-side
+#: The materialize.shared precedent applied to driver-side
 #: index state: entries are plain driver data (numpy arrays, lists,
 #: ints) — nothing persists on executors, so eviction is free.
 #: Warm/cold split documented in BASELINE.md (ANN index-build ledger).
@@ -517,7 +517,7 @@ def _ann_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: drop artifacts keyed by stopped applications (r9 advice: |Q|·k
 #: exact-topk pair lists and centroid matrices otherwise linger on the
 #: driver until the cap happens to evict them), mirroring
-#: llm_dedup._shared's snapshot → probe-outside-lock → reconfirm rule.
+#: materialize's snapshot → probe-outside-lock → reconfirm rule.
 _ANN_INDEX_CACHE: dict[tuple[str, str, str], tuple[SparkSession, object]] = {}
 _ANN_INDEX_LOCK = threading.Lock()
 _ANN_INDEX_CAP = 64
@@ -690,7 +690,7 @@ def _ann_cached(spark: SparkSession, sf_dir: str, artifact: str, build,
     with _ANN_INDEX_LOCK:
         items = list(_ANN_INDEX_CACHE.items())
     stale = [sk for sk, (owner, _) in items
-             if llm_dedup._session_stopped(owner)]
+             if session_stopped(owner)]
     if stale:
         snap = dict(items)
         with _ANN_INDEX_LOCK:
@@ -715,7 +715,7 @@ def _ann_cached(spark: SparkSession, sf_dir: str, artifact: str, build,
 def clear_ann_cache() -> int:
     """Forget every in-memory cached trained-index artifact (next access
     reloads from the persisted store if present, else retrains). The
-    timing-coldness hook mirroring llm_dedup.clear_shared_cache."""
+    timing-coldness hook mirroring api.clear_shared_cache."""
     with _ANN_INDEX_LOCK:
         n = len(_ANN_INDEX_CACHE)
         _ANN_INDEX_CACHE.clear()
@@ -987,8 +987,6 @@ def _ann_ivf_plan(spark: SparkSession, sf_dir: str,
     and trained ≥ hash-sample baseline — asserted in
     tests/test_similarity.py.
     """
-    from .llm_dedup import _spread
-
     e = _emb(spark, sf_dir)
     C = _ivf_centroids(spark, sf_dir, e, train_iters, nlist)
     Cn = _normalized_centroids(C)
@@ -997,12 +995,12 @@ def _ann_ivf_plan(spark: SparkSession, sf_dir: str,
     def make_assign(n_cells: int):
         return _ivf_assign_udf(Cn, n_cells)
 
-    # _spread (r10, the r6 per-file-kernel rule): when the small query
+    # spread (r10, the r6 per-file-kernel rule): when the small query
     # side broadcasts, the per-candidate cosine arithmetic runs INSIDE
     # the corpus scan stage — a single-parquet-file corpus then
     # serializes the whole probe onto one core (measured at the 30×
     # proxy). The repartition is no-op-sized at lake scale.
-    corpus = _spread(spark, e) \
+    corpus = spread(spark, e) \
         .withColumn("cells", make_assign(1)(F.col("emb"))) \
         .select("vec_id", "emb", F.element_at("cells", 1).alias("cell"))
     queries = (
@@ -1093,19 +1091,17 @@ def _range_search_ann_plan(spark: SparkSession, sf_dir: str,
     vectors (unlike IVFPQ's codes) because range membership is EXACT,
     not ranked — there is no shortlist to refine, so the vector must be
     present where the predicate runs."""
-    from .llm_dedup import _spread
-
     e = _emb(spark, sf_dir)
     C = _ivf_centroids(spark, sf_dir, e, train_iters, nlist)
     Cn = _normalized_centroids(C)
     nprobe = min(nprobe, C.shape[0])
     quant = F.expr(_QUANT.replace("embedding", "emb"))
-    # _spread (r10): with the query side broadcast the exact-integer
+    # spread (r10): with the query side broadcast the exact-integer
     # membership arithmetic runs inside the corpus scan stage; a
     # single-file corpus otherwise serializes it onto one core (the r6
     # per-file-kernel rule, measured at the 30× proxy).
     corpus = (
-        _spread(spark, e)
+        spread(spark, e)
         .withColumn("cells", _ivf_assign_udf(Cn, 1)(F.col("emb")))
         .select("vec_id", quant.alias("qv"),
                 F.element_at("cells", 1).alias("cell"))
@@ -1364,13 +1360,11 @@ def _ann_pq_plan(spark: SparkSession, sf_dir: str,
     e = _emb(spark, sf_dir)
     q = e.select("vec_id", F.expr(_QUANT.replace("embedding", "emb"))
                  .alias("qv"))
-    # spread before the per-row interpreted code folds (llm_dedup._spread:
+    # spread before the per-row interpreted code folds (materialize.spread:
     # a single parquet file scans as ONE partition and the whole ADC scan
     # serializes onto one core — measured 4.0 s → 2.6 s warm at sf0.1).
     # Codes only: the candidate stream must never carry vectors.
-    from .llm_dedup import _spread
-
-    qs = _spread(spark, q)
+    qs = spread(spark, q)
     refine = _refine_window(spark, sf_dir, q)
     books = _pq_trained_books(spark, sf_dir, q, train_iters)
 
@@ -1500,8 +1494,6 @@ def _ann_ivfpq_plan(spark: SparkSession, sf_dir: str,
     e = _emb(spark, sf_dir)
     q = e.select("vec_id", F.expr(_QUANT.replace("embedding", "emb"))
                  .alias("qv"))
-    from .llm_dedup import _spread
-
     refine = _refine_window(spark, sf_dir, q)
 
     # coarse quantizer + PQ codebooks: both from the shared trained-
@@ -1517,7 +1509,7 @@ def _ann_ivfpq_plan(spark: SparkSession, sf_dir: str,
     # shape joined a separate cell frame back to qs on vec_id, a
     # corpus-sized shuffle join the single scan replaces (round 8).
     corpus = (
-        _spread(spark, e.select("vec_id", "emb"))
+        spread(spark, e.select("vec_id", "emb"))
         .withColumn("qv", F.expr(_QUANT.replace("embedding", "emb")))
         .withColumn("cell",
                     F.element_at(_ivf_assign_udf(Cn, 1)(F.col("emb")), 1))

@@ -1084,16 +1084,17 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     web-scale corpora move to the Manku block-pair tables at the same
     threshold, or tighten the radius.
     """
-    from .llm_dedup import _track_persist, simhash_pairs
+    from .llm_dedup import simhash_pairs
+    from .materialize import persist
 
     # TRACKED persist (r9 review): simhash_pairs references the
     # signature frame 4-5 times (distinct build, both join sides, the
     # verify), and with an unpersisted input the corpus-wide phash
     # mapInPandas kernel re-executed per reference (measured: 8
     # MapInPandas nodes in the executed plan) — q_dedup_simhash_pairs
-    # avoids this only because its signatures come from the
-    # _shared-persisted frame.
-    sigs = _track_persist(q_multimodal_phash(spark, sf_dir).select(
+    # avoids this only because its signatures come from a
+    # materialize.shared frame.
+    sigs = persist(q_multimodal_phash(spark, sf_dir).select(
         "doc_id",
         # one 64-bit signature: (x >> sh) & mask extracts chunks
         # correctly under arithmetic shift even when bit 63 makes the

@@ -679,11 +679,11 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 (dequant checked). Full-AC streams, restart markers, and 16-bit
     quant tables are decoded in tests/test_multimodal_jpeg.py against an
     independent test-side encoder and an independent direct-form IDCT."""
-    from .llm_dedup import _spread
+    from .materialize import spread
     from .multimodal import fused_round_trip
 
-    docs = _spread(spark, binary_docs(spark, sf_dir)
-                   .select("doc_id", "payload"))
+    docs = spread(spark, binary_docs(spark, sf_dir)
+                  .select("doc_id", "payload"))
     # ^ entropy coding is per-file CPU; a single-file local scan would
     # otherwise run the whole codec on one core.
     return docs.mapInPandas(
@@ -876,11 +876,11 @@ def q_multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     (luma DC 2 vs chroma DC 4), and the half-resolution chroma crop
     were each honored. One fused Python stage over spread partitions,
     like the whole codec family."""
-    from .llm_dedup import _spread
+    from .materialize import spread
     from .multimodal import fused_round_trip
 
-    docs = _spread(spark, binary_docs(spark, sf_dir)
-                   .select("doc_id", "payload"))
+    docs = spread(spark, binary_docs(spark, sf_dir)
+                  .select("doc_id", "payload"))
     return docs.mapInPandas(
         fused_round_trip(jpeg420_encode_batch, jpeg420_decode_batch),
         schema=JPEG420_DECODE_SCHEMA)
@@ -1030,11 +1030,11 @@ def q_multimodal_jpeg_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     reset, and the hash-checked recovered_sum proves the surviving MCU
     ranges decoded exactly. One fused Python stage over spread
     partitions, like the whole codec family."""
-    from .llm_dedup import _spread
+    from .materialize import spread
     from .multimodal import fused_round_trip
 
-    docs = _spread(spark, binary_docs(spark, sf_dir)
-                   .select("doc_id", "payload"))
+    docs = spread(spark, binary_docs(spark, sf_dir)
+                  .select("doc_id", "payload"))
     return docs.mapInPandas(
         fused_round_trip(jpeg_dri_corrupt_encode_batch,
                          jpeg_recover_decode_batch),

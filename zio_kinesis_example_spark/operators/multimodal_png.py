@@ -302,7 +302,7 @@ def q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = binary_docs(spark, sf_dir).select("doc_id", "payload") \
         .repartition(spark.sparkContext.defaultParallelism)
     # ^ deflate/inflate are per-file CPU; a single-file local scan would
-    # otherwise run the whole codec on one core (llm_dedup._spread rule).
+    # otherwise run the whole codec on one core (materialize.spread rule).
     # At 100 TB the lake has many files and this is a no-op-sized shuffle.
     return docs.mapInPandas(
         fused_round_trip(png_encode_batch, png_decode_batch),

@@ -527,8 +527,9 @@ _BUCKETS = 8
 #: serializes the probe-then-write below (r9 review: the bare
 #: tableExists-then-saveAsTable was an unsynchronized check-then-act —
 #: two same-session registry threads could both pass the probe and race
-#: overwrite writes onto one path, the hazard _shared()'s per-key locks
-#: exist for; bucketed builds are rare enough for one module lock)
+#: overwrite writes onto one path; unlike a materialize.shared build, a
+#: duplicate write is not harmless garbage, so the probe and the write
+#: run under one module lock)
 _BUCKETED_LOCK = threading.Lock()
 
 

@@ -124,7 +124,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter keeps the series fold from diverging on the engines' null
     sort order and from collapsing to a whole-series NULL.
     """
-    from .llm_dedup import _track_persist
+    from .materialize import persist
 
     e = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & measure_domain("value"))
@@ -136,7 +136,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tracked persists pin both tiny frames so the raw table is scanned
     # once; the first broadcast job materializes each cache as a side
     # effect (the lazy-cache pattern), released by clear_shared_cache.
-    hourly = _track_persist(hourly_cents_mean(e, "x", hour_col="h"))
+    hourly = persist(hourly_cents_mean(e, "x", hour_col="h"))
 
     def ofold(term):
         return F.expr(
@@ -145,7 +145,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stats = (hourly.groupBy("event_type")
              .agg((ofold("x") / F.count(F.lit(1))).alias("mean")))
-    d = _track_persist(
+    d = persist(
         hourly.join(F.broadcast(stats), "event_type")
         .select("event_type", "h",
                 (F.col("x") - F.col("mean")).alias("dx")))

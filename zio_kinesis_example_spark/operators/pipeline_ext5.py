@@ -91,15 +91,15 @@ def q_multimodal_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE fused ``mapInPandas`` stage (multimodal.
     fused_round_trip — one Python worker per task, encoded bytes never
     re-cross the JVM boundary) over SPREAD partitions (the
-    llm_dedup._spread rule: a single-parquet-file scan would run the
+    materialize.spread rule: a single-parquet-file scan would run the
     whole codec on one core — measured 2.7 s cold / load-sensitive vs
     ~1.2 s spread at sf0.1); Arrow batches stream through numpy
     flat-buffer passes, constant memory per task, no per-row Python."""
-    from .llm_dedup import _spread
+    from .materialize import spread
     from .multimodal import fused_round_trip
 
-    return _spread(spark, binary_docs(spark, sf_dir)
-                   .select("doc_id", "payload")) \
+    return spread(spark, binary_docs(spark, sf_dir)
+                  .select("doc_id", "payload")) \
         .mapInPandas(fused_round_trip(ppm_encode_batch, ppm_decode_batch),
                      schema=PPM_DECODE_SCHEMA)
 

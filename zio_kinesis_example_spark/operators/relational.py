@@ -26,8 +26,9 @@ from pyspark.sql.window import Window
 from ..catalog import load
 from .exact import (
     KNUTH, SQL_MONEY, cents_sum, dec_avg_double, dec_sum_double,
-    measure_domain, money_term, spread_scan, sql_dec_sum_double, ts_lit,
+    measure_domain, money_term, sql_dec_sum_double, ts_lit,
 )
+from .materialize import spread_scan
 from ..registry import query
 
 # --------------------------------------------------------------------------

@@ -101,8 +101,8 @@ def _ensure_loaded() -> None:
     # each serve-order group the harness's budget covers the most queries.
     from .operators import (  # noqa: F401
         scalar_funcs, llm_text, curation, multimodal, udfs, relational,
-        timeseries, analytics, events_analytics, tpch_suite, llm_similarity,
-        llm_dedup, advanced,
+        timeseries, analytics, events_analytics, tpch_suite, llm_dedup,
+        llm_similarity, advanced,
     )
     # pipeline_ext registers LAST: its queries sort after the round-3
     # backlog in the harness's unverified-first serve order, so the

@@ -46,7 +46,7 @@ def ivf_index(spark: SparkSession, sf_dir: str,
     floats, shipped in the assign UDF's closure). Centroids come from
     the persisted trained-index store when present — a fresh session
     runs ZERO training jobs."""
-    from ..operators.llm_dedup import _track_persist
+    from ..operators.materialize import persist, spread
 
     if train_iters is None:
         train_iters = _sim._IVF_TRAIN_ITERS
@@ -67,16 +67,15 @@ def ivf_index(spark: SparkSession, sf_dir: str,
     C = _sim._ivf_centroids(spark, sf_dir, e, train_iters, nlist)
     Cn = _sim._normalized_centroids(C)
     # tracked persist (r9 review): clear_shared_cache() releases the
-    # frame and the capped plan-aware LRU bounds a long-lived driver
-    # that builds many stream indexes — an untracked loose persist
-    # would pin executor storage until session death.
-    # _spread (r10, the r6 per-file-kernel rule): the per-batch probe's
+    # frame, and a long-lived driver that builds many stream indexes
+    # keeps at most materialize.LOOSE_CAP of them (oldest dropped
+    # first) — an untracked persist would pin executor storage until
+    # session death.
+    # spread (r10, the r6 per-file-kernel rule): the per-batch probe's
     # exact-cosine arithmetic runs against these persisted partitions —
     # a single-file corpus would pin every micro-batch to one core.
-    from ..operators.llm_dedup import _spread
-
-    corpus_cells = _track_persist(
-        _spread(spark, e)
+    corpus_cells = persist(
+        spread(spark, e)
         .withColumn("cells", _sim._ivf_assign_udf(Cn, 1)(F.col("emb")))
         .select("vec_id", "emb", F.element_at("cells", 1).alias("cell"))
     )

@@ -248,7 +248,8 @@ def main(argv):
     if argv and argv[0] == "--digest":
         digest(argv[1:])
         return
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))))
     from zio_kinesis_example_spark.registry import all_specs
     from zio_kinesis_example_spark.session import get_spark
 

@@ -63,7 +63,7 @@ def build_proxy(out_dir: str, copies: int, src: str = SRC) -> str:
     labels = np.asarray(t.column("label").to_pylist(), dtype=np.int32)
     # one parquet FILE per copy — the realistic lake layout (a
     # single-file corpus caps the scan at one input partition and
-    # serializes downstream per-candidate arithmetic; see _spread)
+    # serializes downstream per-candidate arithmetic; see materialize.spread)
     os.makedirs(dest, exist_ok=True)
     for k in range(copies):
         out = pa.table({
