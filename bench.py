@@ -33,7 +33,10 @@ def force(df) -> None:
 def warmup(spark, sf_dir: str) -> None:
     """One small scan+agg+join before timing: pays JVM classloading /
     codegen-compiler warmup once instead of charging it to the
-    alphabetically-first query."""
+    alphabetically-first query. Compiled classes then stay cached
+    (``session.CODEGEN_CACHE_MAX_ENTRIES`` holds every class a registry
+    pass generates), so each query's second run reuses its first run's
+    classes instead of recompiling what earlier queries evicted."""
     from pyspark.sql import functions as F
     from zio_kinesis_example_spark.catalog import load
     li = load(spark, sf_dir, "lineitem").limit(1000)

@@ -516,8 +516,8 @@ def test_emb_table_empty_corpus_returns_empty_frame(spark,
     t = pa.table({
         "vec_id": pa.array([1, 2], type=pa.int64()),
         "embedding": pa.array([None, None],
-                              type=pa.list_(pa.float64())),
-        "label": pa.array([0, 1], type=pa.int64()),
+                              type=pa.list_(pa.float32())),
+        "label": pa.array([0, 1], type=pa.int32()),
     })
     pq.write_table(t, os.path.join(d, "embeddings.parquet"))
     df = S.emb_table(spark, d)
@@ -546,8 +546,8 @@ def test_dim_cache_invalidated_on_rebuild_in_place(spark,
         t = pa.table({
             "vec_id": pa.array(range(n), type=pa.int64()),
             "embedding": pa.array([[0.5] * dim] * n,
-                                  type=pa.list_(pa.float64())),
-            "label": pa.array([0] * n, type=pa.int64()),
+                                  type=pa.list_(pa.float32())),
+            "label": pa.array([0] * n, type=pa.int32()),
         })
         pq.write_table(t, p)
 

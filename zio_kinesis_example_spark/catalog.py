@@ -1,15 +1,24 @@
 """Typed loaders for the driver-generated testdata tables (TESTDATA.md,
 FIXTURES.md §B).
 
-Schemas are *declared*, not inferred, mirroring the reference's static
-nominal schema stance (case class + compile-time codec,
-reference TestMsgJsonSerde.scala:9, TestMsg.scala:3): we verify the parquet
-footer schema matches what FIXTURES.md promises rather than silently
-accepting drift.
+Every table but ``events`` has a *declared* schema (``SCHEMAS``),
+mirroring the reference's static nominal schema stance (case class +
+compile-time codec, reference TestMsgJsonSerde.scala:9, TestMsg.scala:3).
+A declared read starts no Spark job; an inferred one runs a one-task
+parquet-footer job on every call. ``tests/test_catalog.py`` compares each
+declared schema with the footers of every data copy, so drift fails a
+test instead of being silently accepted, and a column whose footer type
+the declared one cannot read fails the scan.
+
+``events`` stays inferred: the unit of its ``ts`` column depends on the
+producer (TIMESTAMP(NANOS) per FIXTURES.md, µs in every copy generated so
+far). A declared ``timestamp_ntz`` read fails on a NANOS file, and a
+declared ``bigint`` read cannot tell the two units apart; inference does.
 
 Scale note: loaders return plain ``spark.read.parquet`` scans so Catalyst
 keeps full pushdown/pruning freedom — no caching, no collect. At 100 TB the
-same code path reads a partitioned lake; only ``sf_dir`` changes.
+same code path reads a partitioned lake; only ``sf_dir`` changes, and a
+declared schema also spares the footer read that inference does there.
 """
 
 from __future__ import annotations
@@ -19,6 +28,10 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DoubleType, FloatType, IntegerType, LongType, StringType,
+    StructField, StructType, TimestampNTZType,
+)
 
 from .session import RUNTIME_CONFS
 
@@ -26,6 +39,37 @@ TABLES: tuple[str, ...] = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+_I, _L, _D, _S = IntegerType(), LongType(), DoubleType(), StringType()
+_TS = TimestampNTZType()
+
+#: Declared schemas: Spark's own inferred schema of each table (same types,
+#: same column order, every column nullable as Spark reports it).
+SCHEMAS: dict[str, StructType] = {
+    name: StructType([StructField(c, t, True) for c, t in cols])
+    for name, cols in {
+        "region": [("r_regionkey", _I), ("r_name", _S)],
+        "nation": [("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)],
+        "customer": [("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+                     ("c_acctbal", _D), ("c_mktsegment", _S)],
+        "supplier": [("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I),
+                     ("s_acctbal", _D)],
+        "part": [("p_partkey", _L), ("p_name", _S), ("p_brand", _S),
+                 ("p_type", _S), ("p_size", _I), ("p_retailprice", _D)],
+        "orders": [("o_orderkey", _L), ("o_custkey", _L),
+                   ("o_orderstatus", _S), ("o_totalprice", _D),
+                   ("o_orderdate", _TS), ("o_orderpriority", _S)],
+        "lineitem": [("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+                     ("l_linenumber", _I), ("l_quantity", _D),
+                     ("l_extendedprice", _D), ("l_discount", _D),
+                     ("l_tax", _D), ("l_returnflag", _S),
+                     ("l_linestatus", _S), ("l_shipdate", _TS)],
+        "documents": [("doc_id", _L), ("text", _S), ("lang", _S),
+                      ("source", _S), ("n_chars", _L)],
+        "embeddings": [("vec_id", _L), ("embedding", ArrayType(FloatType())),
+                       ("label", _I)],
+    }.items()
+}
 
 #: SparkSession objects already configured — configure() used to re-issue
 #: its conf.set py4j round trips on EVERY load() call (thousands per
@@ -93,13 +137,15 @@ def path(sf_dir: str, name: str) -> str:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with normalized column types.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS); Spark reads it as
-    int64 ns (``nanosAsLong``) and we convert to timestamp_ntz at µs
-    precision — the same truncation DuckDB applies, so oracle comparisons
-    agree. All other tables load as-is (orders/lineitem dates are already
-    timestamp_ntz).
+    A table in ``SCHEMAS`` is read with its declared schema. ``events`` is
+    inferred: when its ``ts`` is stored as parquet TIMESTAMP(NANOS), Spark
+    reads it as int64 ns (``nanosAsLong``) and we convert to timestamp_ntz
+    at µs precision — the same truncation DuckDB applies, so oracle
+    comparisons agree; a µs ``ts`` already reads as timestamp_ntz.
     """
     configure(spark)
+    if name in SCHEMAS:
+        return spark.read.schema(SCHEMAS[name]).parquet(path(sf_dir, name))
     df = spark.read.parquet(path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
